@@ -258,8 +258,8 @@ def build_document_model(spark: SparkSession, pages: DataFrame,
                 "attachment_position", "is_attached_to")
     )
     edges0 = E.convert_edges(converted)
-    # no _stage here: synthesize_waypoints checkpoints its loop input
-    # unconditionally (see its docstring)
+    # no _stage here: synthesize_waypoints checkpoints its input and
+    # its kernel output unconditionally (see its docstring)
     edges1 = E.resolve_edge_points(edges0, targets)
     # implicit Elbow/Curved waypoints (F4/F5) before group re-basing
     from .waypoints import synthesize_waypoints

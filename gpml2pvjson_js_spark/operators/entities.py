@@ -114,10 +114,6 @@ def _build_group_style_df(spark: SparkSession) -> DataFrame:
     )
 
 
-def _eff(df: DataFrame, col: str) -> Column:
-    return F.coalesce(df[col], df["d_" + col])
-
-
 _EFF_EXPRS: dict | None = None
 
 

@@ -1,18 +1,21 @@
 """Waypoint synthesis stage: Elbow/Curved edges gain their implicit
-intermediate points (F4/F5) via the Arrow-batched geometry kernel.
+intermediate points (F4/F5) via the geometry kernel.
 
 Hyperedges (edges attached to other edges via anchors) need the
-referenced edge's resolved points to pick an emanation orientation, so
-the stage runs as bounded topo rounds (the Spark analog of the
-reference's fixpoint scheduler, src/2013a/toPvjson.ts:470-637): round
-k processes edges whose referenced edges are already final. Leftovers
-(cycles) pass through unchanged, matching the reference's cycle
-tolerance.
+referenced edge's resolved points to pick an emanation orientation.
+That dependency never leaves its (url, frag) document, so the stage is
+one grouped-map kernel per document that contains a curvy edge, the
+Spark analog of the reference's per-document fixpoint scheduler
+(src/2013a/toPvjson.ts:470-637). Inside a document the kernel runs
+`calculate_all_points` in dependency (Kahn) order: a curvy edge runs
+once every curvy edge it is attached to is final. Edges still blocked
+when nothing more can run are cycles and keep their explicit points,
+matching the reference's cycle tolerance.
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
+from collections import defaultdict
 
 import pandas as pd
 
@@ -22,170 +25,94 @@ from pyspark.storagelevel import StorageLevel
 
 from .entities import DOC_KEY
 from ..functions.geometry import calculate_all_points
-from ..functions.skew import left_join_skipping_null_keys
 
-# hyperedge depth covered lazily (no driver actions): the deepest
-# chain in the reference golden corpus is depth 3
-# (hyperedge-singleend-depth3-*), so 4 rounds leave headroom; deeper
-# chains pass through unchanged (reference cycle tolerance)
-MAX_ROUNDS = 4
 _CURVY = ("ElbowLine", "CurvedLine")
 
 
 def _point_to_dict(p) -> dict:
+    # Arrow hands array fields over as numpy arrays, whose truth value
+    # the geometry code cannot test (`pos or default`): use lists
+    def seq(k):
+        v = p.get(k)
+        return None if v is None else list(v)
     return {
         "x": p["x"], "y": p["y"],
         "is_attached_to": p.get("is_attached_to"),
-        "attachment_position": p.get("attachment_position"),
-        "attachment_offset": p.get("attachment_offset"),
-        "orientation": p.get("orientation"),
+        "attachment_position": seq("attachment_position"),
+        "attachment_offset": seq("attachment_offset"),
+        "orientation": seq("orientation"),
         "marker": p.get("marker"),
     }
 
 
-def _synthesize_batch(batches: Iterable[pd.DataFrame]
-                      ) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        new_points = []
-        for points, src_pts, tgt_pts in zip(
-                pdf["points"], pdf["src_edge_points"],
-                pdf["tgt_edge_points"]):
-            pts = [_point_to_dict(dict(p)) for p in points]
-            src = ([_point_to_dict(dict(p)) for p in src_pts]
-                   if src_pts is not None and len(src_pts) else None)
-            tgt = ([_point_to_dict(dict(p)) for p in tgt_pts]
-                   if tgt_pts is not None and len(tgt_pts) else None)
+def _edge_points(points) -> list[dict] | None:
+    if points is None or not len(points):
+        return None
+    return [_point_to_dict(dict(p)) for p in points]
+
+
+def _synthesize_doc(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One document's edges -> the same rows, curvy edges synthesized
+    in Kahn order over their attachments to other curvy edges."""
+    ids, points = pdf["id"].tolist(), pdf["points"].tolist()
+    rows_of: dict[str, list[int]] = defaultdict(list)
+    for i, draw_as in enumerate(pdf["draw_as"]):
+        if draw_as in _CURVY:
+            rows_of[ids[i]].append(i)
+    # final points by edge id: straight edges are final as given
+    final = {e: p for e, p in zip(ids, points) if e not in rows_of}
+    refs = [() if r is None else r for r in pdf["is_attached_to"]]
+    deps = {e: {r for i in rows for r in refs[i] if r in rows_of}
+            for e, rows in rows_of.items()}
+    dependents: dict[str, list[str]] = defaultdict(list)
+    for e, ds in deps.items():
+        for r in ds:
+            dependents[r].append(e)
+
+    first, last = pdf["endpoint_first_ref"], pdf["endpoint_last_ref"]
+    out = list(points)
+    ready = [e for e, ds in deps.items() if not ds]
+    while ready:
+        e = ready.pop()
+        for i in rows_of[e]:
+            pts = _edge_points(points[i])
             try:
-                out = calculate_all_points(pts, src, tgt)
+                out[i] = calculate_all_points(
+                    pts, _edge_points(final.get(first.iat[i])),
+                    _edge_points(final.get(last.iat[i])))
             except Exception:
-                out = pts  # cycle/degenerate tolerance: keep explicit
-            new_points.append(out)
-        res = pdf.drop(columns=["points", "src_edge_points",
-                                "tgt_edge_points"])
-        res["points"] = new_points
-        yield res
+                pass  # degenerate geometry: keep the explicit points
+        final[e] = out[rows_of[e][-1]]
+        for d in dependents[e]:
+            deps[d].discard(e)
+            if not deps[d]:
+                ready.append(d)
+    # ids whose deps never empty are cycles: their rows keep `points`
+    return pdf.assign(points=out)
 
 
-def synthesize_waypoints(edges: DataFrame,
-                         max_rounds: int = MAX_ROUNDS) -> DataFrame:
+def synthesize_waypoints(edges: DataFrame) -> DataFrame:
     """edges (resolved, from resolve_edge_points) -> edges with
     Elbow/Curved implicit waypoints made explicit.
 
-    The loop input is checkpointed UNCONDITIONALLY (independent of the
-    SPARK_GRAFT_STAGE_STORAGE fan-out mode): every round references
-    the edges frame several times, so an un-staged input would be
-    re-embedded ~4x per round and driver plan analysis goes
-    super-linear (observed: 25+ min of single-threaded analysis)."""
+    Only documents with a curvy edge enter the kernel (a distinct-doc
+    semi-join); every other document's edges bypass it through the
+    anti-join and are never shipped to Python. Both checkpoints stay:
+    the input is read three times (curvy docs, semi-join, anti-join),
+    so an un-staged input would re-embed the resolve_edge_points plan
+    into each (driver analysis grows super-linearly), and the output
+    reaches several model frames (z-order map, pathway contains, the
+    edges frame), each of which would otherwise re-run the Python
+    kernel. The output checkpoint covers the anti-join side too, so
+    the doc-key aggregate's shuffle does not recur in every
+    downstream job."""
     edges = edges.localCheckpoint(
         eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
-    needs = edges.filter(F.col("draw_as").isin(*_CURVY))
-    rest = edges.filter(~F.col("draw_as").isin(*_CURVY))
-
-    # The loop state deliberately EXCLUDES the untouched majority:
-    # `rest` (straight edges — most of the corpus) is emitted once at
-    # the end and never re-staged. What carries between rounds is only
-    # (a) the narrow resolved-points pool (url, frag, id, points) that
-    # ready-tests and point-attachment join against, and (b) the
-    # shrinking `needs` set. (A previous version unioned every round's
-    # output into one growing full-width frame and re-checkpointed it
-    # per round — 4x full-corpus serialization, measured 15x slower at
-    # replicate-64.)
-    pool = rest.select(
-        F.col("url").alias("d_url"), F.col("frag").alias("d_frag"),
-        F.col("id").alias("d_id"), F.col("points").alias("d_points"))
-
-    out_schema = edges.schema
-    fixed_parts: list[DataFrame] = []
-    # NOTE: fixed rounds with NO driver-side actions — the whole stage
-    # stays one lazy DAG (same rationale as the fixed-round CC mode in
-    # canonicalize.py). Curvy-edge chains deeper than max_rounds pass
-    # through unchanged (reference cycle tolerance).
-    for rnd in range(max_rounds):
-        # an edge is ready when each edge-typed endpoint ref has
-        # resolved points in the pool. A ref is BLOCKED iff it names
-        # an edge whose points are not yet resolved — and the set of
-        # unresolved edges at round entry is exactly `needs` itself
-        # (rest + fixed parts + needs partition the edge ids), so one
-        # lookup against the small shrinking needs frame replaces the
-        # former pair of joins against all-edges and the full pool.
-        refs = needs.select(*DOC_KEY, "id",
-                            F.explode_outer("is_attached_to").alias("ref"))
-        blocked_ids = needs.select(
-            F.col("url").alias("n_url"), F.col("frag").alias("n_frag"),
-            F.col("id").alias("n_id"))
-        # unattached refs (NULL — the majority) bypass the lookup
-        refs = left_join_skipping_null_keys(
-            refs, blocked_ids,
-            (refs.url == blocked_ids.n_url)
-            & (refs.frag == blocked_ids.n_frag)
-            & (refs.ref == blocked_ids.n_id),
-            "ref",
-        ).withColumn("ref_blocked", F.col("n_id").isNotNull()) \
-            .drop("n_url", "n_frag", "n_id")
-        ready_ids = refs.groupBy(*DOC_KEY, "id").agg(
-            F.min(F.when(F.col("ref_blocked"), 0)
-                  .otherwise(1)).alias("ready")
-        ).filter(F.col("ready") == 1).select(*DOC_KEY, "id")
-
-        ready = needs.join(ready_ids, [*DOC_KEY, "id"], "left_semi")
-        # attach referenced edge points for anchor-attached endpoints
-        dp = pool.select(
-            F.col("d_url").alias("p_url"), F.col("d_frag").alias("p_frag"),
-            F.col("d_id").alias("p_id"),
-            F.col("d_points").alias("src_edge_points"))
-        ready2 = left_join_skipping_null_keys(
-            ready, dp,
-            (ready.url == dp.p_url) & (ready.frag == dp.p_frag)
-            & (ready.endpoint_first_ref == dp.p_id),
-            "endpoint_first_ref",
-        ).drop("p_url", "p_frag", "p_id")
-        dp2 = pool.select(
-            F.col("d_url").alias("q_url"), F.col("d_frag").alias("q_frag"),
-            F.col("d_id").alias("q_id"),
-            F.col("d_points").alias("tgt_edge_points"))
-        ready2 = left_join_skipping_null_keys(
-            ready2, dp2,
-            (ready2.url == dp2.q_url) & (ready2.frag == dp2.q_frag)
-            & (ready2.endpoint_last_ref == dp2.q_id),
-            "endpoint_last_ref",
-        ).drop("q_url", "q_frag", "q_id")
-
-        # checkpoint ONLY this round's newly-fixed rows (small) — cuts
-        # the iterative lineage without restaging the whole corpus;
-        # SERIALIZED blocks (deserialized storage measured to
-        # GC-thrash at high parallelism)
-        def _ck(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(
-                eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
-
-        fixed_df = ready2.mapInPandas(_synthesize_batch, out_schema)
-        needs_next = needs.join(ready_ids, [*DOC_KEY, "id"], "left_anti")
-        if rnd + 1 < max_rounds:
-            # the round's two checkpoints are independent siblings —
-            # with AQE on, a lazy checkpoint's toRdd materializes its
-            # shuffle stages synchronously, so checkpointing them
-            # concurrently overlaps those jobs (same rationale as
-            # assemble._stage_many). After the LAST round, extending
-            # the pool is dead code and the final `needs` (cycle
-            # passthrough) is referenced exactly once, so its
-            # checkpoint would buy nothing — each skipped lazy
-            # checkpoint saves a full planning+materialization pass
-            # on the driver.
-            from concurrent.futures import ThreadPoolExecutor
-            with ThreadPoolExecutor(max_workers=2) as ex:
-                ff, nf = ex.submit(_ck, fixed_df), \
-                    ex.submit(_ck, needs_next)
-                fixed, needs = ff.result(), nf.result()
-            pool = pool.unionByName(fixed.select(
-                F.col("url").alias("d_url"), F.col("frag").alias("d_frag"),
-                F.col("id").alias("d_id"),
-                F.col("points").alias("d_points")))
-        else:
-            fixed, needs = _ck(fixed_df), needs_next
-        fixed_parts.append(fixed)
-
-    out = rest
-    for part in fixed_parts:
-        out = out.unionByName(part)
-    # cycle tolerance: anything never ready passes through unchanged
-    return out.unionByName(needs)
+    curvy_docs = edges.filter(F.col("draw_as").isin(*_CURVY)) \
+        .select(*DOC_KEY).distinct()
+    synthesized = edges.join(curvy_docs, DOC_KEY, "left_semi") \
+        .groupBy(*DOC_KEY).applyInPandas(_synthesize_doc, edges.schema)
+    return edges.join(curvy_docs, DOC_KEY, "left_anti") \
+        .unionByName(synthesized) \
+        .localCheckpoint(eager=False,
+                         storageLevel=StorageLevel.MEMORY_AND_DISK)

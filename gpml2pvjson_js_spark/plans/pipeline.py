@@ -19,6 +19,7 @@ channel the north rule requires).
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 
@@ -43,9 +44,9 @@ def _write_mult() -> int:
 def with_bucket_cols(df: DataFrame, n_buckets: int, mult: int,
                      key: str = "url") -> DataFrame:
     """Materialize the snapshot layout keys (bucket, __wsalt) as
-    columns — MUST stay expression-identical to SnapshotStore.commit's
-    repartition keys so a pre-bucketed frame lands in the same layout
-    the store would produce itself."""
+    columns — the one layout expression: SnapshotStore.commit
+    repartitions on these keys, so a frame pre-bucketed with them
+    lands in the same layout the store would produce itself."""
     return (df.withColumn(
                 "bucket",
                 F.pmod(F.xxhash64(F.col(key)),
@@ -132,22 +133,8 @@ class SnapshotStore:
         manifest with per-partition lineage + metrics."""
         data_path, manifest_path = self._paths(stage)
         t0 = time.time()
-        out = df
-        if "bucket" in df.columns and "__wsalt" in df.columns:
-            # PRE-BUCKETED frame (with_bucket_cols layout keys carried
-            # by the operator's own exchange — bucketed_distinct /
-            # jsonld_documents(bucketize=...)): the data is already
-            # hash-partitioned on (bucket, __wsalt), so writing here
-            # without the repartition keeps the one-dir-per-task
-            # layout while skipping a second full-corpus shuffle.
-            out = df.drop("__wsalt")
-            (out.write.mode("overwrite").partitionBy("bucket")
-                .parquet(data_path))
-        elif bucket_col in df.columns:
-            out = df.withColumn(
-                "bucket",
-                F.pmod(F.xxhash64(F.col(bucket_col)),
-                       F.lit(self.n_buckets)).cast("int"))
+        if bucket_col in df.columns and not (
+                "bucket" in df.columns and "__wsalt" in df.columns):
             # 2 tasks per bucket (an independent seeded hash splits
             # each bucket), every task writing exactly ONE bucket dir.
             # Measured tradeoff: partitioning by bucket alone gives
@@ -158,19 +145,26 @@ class SnapshotStore:
             # thrashed the JVM and the write ANTI-scaled (87 s at 32
             # cores vs 51 s at 8). One-dir-per-task with a salt is
             # both scalable and allocation-bounded.
-            mult = int(os.environ.get(
-                "SPARK_GRAFT_WRITE_TASKS_PER_BUCKET", "2"))
-            salt2 = F.pmod(F.xxhash64(F.col(bucket_col), F.lit(1)),
-                           F.lit(mult))
-            # scale-adaptive write parallelism: the hash keys still
+            # Scale-adaptive write parallelism: the hash keys still
             # pin the one-dir-per-task layout for corpus-scale frames
             # (AQE's parallelismFirst coalescing never drops a frame
             # >= ~cores x minPartitionSize below default parallelism),
             # while near-empty stages (quarantine, vocabularies)
             # coalesce to a few tasks instead of paying a fixed
             # mult * n_buckets task floor per commit.
-            (out.repartition(F.col("bucket"), salt2)
-                .write.mode("overwrite").partitionBy("bucket")
+            df = with_bucket_cols(df, self.n_buckets, _write_mult(),
+                                  key=bucket_col) \
+                .repartition("bucket", "__wsalt")
+        out = df
+        if "bucket" in df.columns and "__wsalt" in df.columns:
+            # bucketed frame, either above or PRE-BUCKETED by the
+            # operator's own exchange (bucketed_distinct /
+            # jsonld_documents(bucketize=...)): the data is already
+            # hash-partitioned on (bucket, __wsalt), so writing
+            # without another repartition keeps the one-dir-per-task
+            # layout while skipping a second full-corpus shuffle.
+            out = df.drop("__wsalt")
+            (out.write.mode("overwrite").partitionBy("bucket")
                 .parquet(data_path))
         else:
             out.write.mode("overwrite").parquet(data_path)
@@ -246,7 +240,9 @@ class Pipeline:
                 if kv._1() not in persisted_before:
                     kv._2().unpersist(False)
         except Exception:
-            pass  # cleanup is best-effort; never fail a committed run
+            # cleanup is best-effort; never fail a committed run
+            logging.getLogger(__name__).warning(
+                "releasing staged RDD blocks failed", exc_info=True)
 
     def _persisted_ids(self) -> set:
         try:
@@ -256,6 +252,8 @@ class Pipeline:
                 ids.add(it.next()._1())
             return ids
         except Exception:
+            logging.getLogger(__name__).warning(
+                "listing persistent RDDs failed", exc_info=True)
             return set()
 
     def run(self, resume: bool = True,

@@ -168,6 +168,43 @@ def test_empty_stage_round_trip(spark, tmp_path_factory):
     assert "error" in q.columns  # schema preserved for empty snapshot
 
 
+def test_commit_layout_matches_prebucketed_layout(spark, tmp_path_factory):
+    """SnapshotStore.commit buckets a plain frame with the same
+    with_bucket_cols keys a pre-bucketed frame carries: both land in
+    the same bucket dirs with the same rows per bucket."""
+    from gpml2pvjson_js_spark.plans.pipeline import (
+        SnapshotStore, with_bucket_cols)
+
+    store = SnapshotStore(str(tmp_path_factory.mktemp("kgout_layout")),
+                          n_buckets=4)
+    df = spark.range(200).select(
+        F.concat(F.lit("https://d/"), (F.col("id") % 30)).alias("url"),
+        F.col("id"))
+    pre = with_bucket_cols(df, 4, 2).repartition("bucket", "__wsalt")
+    store.commit(df, "plain")
+    store.commit(pre, "pre")
+    assert store.manifest("plain")["partitions"] == \
+        store.manifest("pre")["partitions"]
+    assert len(store.manifest("plain")["partitions"]) == 4
+
+
+def test_best_effort_block_release_logs_failures(caplog):
+    class _NoContext:
+        @property
+        def sparkContext(self):
+            raise RuntimeError("gateway gone")
+
+    p = Pipeline.__new__(Pipeline)
+    p.spark = _NoContext()
+    with caplog.at_level("WARNING",
+                         logger="gpml2pvjson_js_spark.plans.pipeline"):
+        assert p._persisted_ids() == set()
+        p._release_stage_blocks(set())
+    assert [r.getMessage() for r in caplog.records] == [
+        "listing persistent RDDs failed",
+        "releasing staged RDD blocks failed"]
+
+
 def test_bucketed_distinct_fuses_dedup_into_one_exchange(spark):
     """bucketed_distinct == dropDuplicates relationally, with exactly
     ONE Exchange in the plan: the (bucket, __wsalt) hash partitioning
